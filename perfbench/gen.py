@@ -5,13 +5,14 @@ document corpus shaped like the ``documents`` table of
 ``tools/gen_testdata.py``, with every pseudo-random choice drawn from one
 ``numpy`` generator keyed on the seed: the same seed gives byte-identical
 tables, and sizes do not depend on the seed (only contents do), so every
-seed asks the program for the same amount of work.
+seed asks the program for the same amount of work. The sizes are the
+constants ``RIDES`` and ``DOCS`` below.
 
 Tables are written with pyarrow, not Spark, so generation runs no program
 code. Timestamps are UTC microseconds, the type Spark itself writes for
 this lake.
 
-    python3 perfbench/gen.py --seed 7 --out .bench_work/gen --rides 4000 --docs 15000
+    python3 perfbench/gen.py --seed 7 --out .bench_work/gen
 """
 
 from __future__ import annotations
@@ -25,8 +26,12 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Shape constants of tools/gen_stride_data.py.
-N_DATES = 10
+# Input sizes: rides in the stride lake, documents in the corpus.
+RIDES = 3000
+DOCS = 5000
+
+# Shape constants of tools/gen_stride_data.py, over fewer days.
+N_DATES = 3
 N_ROUTES = 200
 N_STOPS = 1000
 STOPS_PER_RIDE = 5
@@ -85,8 +90,8 @@ def _pick(rng: np.random.Generator, n: int, k: int) -> np.ndarray:
     return m
 
 
-def stride_lake(base_dir: str, seed: int, n_rides: int) -> dict:
-    """Write a stride lake of ``n_rides`` rides over ``N_DATES`` days.
+def stride_lake(base_dir: str, seed: int) -> dict:
+    """Write a stride lake of ``RIDES`` rides over ``N_DATES`` days.
 
     Shape, as in tools/gen_stride_data.py: date-versioned GTFS dims, two
     GTFS rides per SIRI ride (a tier-1 match within a minute and a
@@ -95,6 +100,7 @@ def stride_lake(base_dir: str, seed: int, n_rides: int) -> dict:
     Returns ``{table: {"rows", "bytes"}}``.
     """
     rng = np.random.default_rng([seed, 1])
+    n_rides = RIDES
     os.makedirs(base_dir, exist_ok=True)
     out: dict[str, pa.Table] = {}
     files: dict[str, int] = {}
@@ -279,8 +285,8 @@ def stride_lake(base_dir: str, seed: int, n_rides: int) -> dict:
     return sizes
 
 
-def corpus(base_dir: str, seed: int, n_docs: int) -> dict:
-    """Write ``{base_dir}/documents.parquet`` with ``n_docs`` documents.
+def corpus(base_dir: str, seed: int) -> dict:
+    """Write ``{base_dir}/documents.parquet`` with ``DOCS`` documents.
 
     Shape, as in tools/gen_testdata.py: thirty words from a vocabulary
     that grows with the corpus (real stopwords first, synthetic ``wN``
@@ -291,6 +297,7 @@ def corpus(base_dir: str, seed: int, n_docs: int) -> dict:
     ``stride_lake`` does.
     """
     rng = np.random.default_rng([seed, 2])
+    n_docs = DOCS
     v_size = max(40, int(1500 * n_docs / 50_000))
     words = np.array(VOCAB + [f"w{i}" for i in range(len(VOCAB), v_size)])
     base = words[rng.integers(0, v_size, (n_docs, 30))]
@@ -324,16 +331,11 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--rides", type=int, default=0)
-    ap.add_argument("--docs", type=int, default=0)
     args = ap.parse_args()
     if os.path.exists(args.out):
         ap.error(f"--out {args.out} already exists")
-    sizes = {}
-    if args.rides:
-        sizes.update(stride_lake(os.path.join(args.out, "lake"), args.seed, args.rides))
-    if args.docs:
-        sizes.update(corpus(os.path.join(args.out, "corpus"), args.seed, args.docs))
+    sizes = stride_lake(os.path.join(args.out, "lake"), args.seed)
+    sizes.update(corpus(os.path.join(args.out, "corpus"), args.seed))
     print(json.dumps(sizes, indent=1))
 
 

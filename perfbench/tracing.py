@@ -6,8 +6,8 @@ makes into each layer: ``rep`` around one timed pass, ``task.<t>`` around
 each ``run_task``, and ``sources.read_table`` / ``sources.overwrite``
 around the lake reads and snapshot writes the tasks make. Each span sets
 the Spark job group to its id, so every Spark job names the span that
-started it. The layer calls are reached by wrapping module attributes for
-the duration of the traced run (``Tracer.install`` / ``uninstall``); the
+started it. The layer calls are reached by wrapping module attributes
+while a traced pass runs (``Tracer.install`` / ``uninstall``); the
 program itself is not edited.
 
 Everything stays in memory until the run ends; ``write_spans`` then
@@ -33,17 +33,11 @@ EXEC_KEYS = ("run_s", "cpu_s", "shuffle_mb", "spill_mb", "tasks")
 
 
 class NullTracer:
-    """Tracing off: spans and counters cost nothing."""
+    """Tracing off: spans cost nothing."""
 
     @contextlib.contextmanager
     def span(self, name: str):
         yield None
-
-    def reset_counters(self) -> None:
-        pass
-
-    def counters(self) -> dict:
-        return {}
 
 
 class Tracer(NullTracer):

@@ -1,16 +1,17 @@
-"""The benchmark's three workloads and their correctness checks.
+"""The benchmark's two workloads and their correctness checks.
 
 Each workload reaches the program only through ``plans.tasks.run_task``
 and the tasks registered by ``plans.stride_tasks`` and
-``plans.llm_tasks``. A workload has three steps:
+``plans.llm_tasks``. A workload has five steps:
 
-- ``setup``: generate the seeded inputs and run one untimed warm-up pass
-  (timed as part of ``setup_s``); its outputs become the reference every
-  timed pass must reproduce;
+- ``generate``: write the seeded inputs (part of ``setup_s``);
+- ``warmup``: one untimed pass in the fresh process; its outputs become
+  the reference the timed passes are checked against;
 - ``checks_once``: per-seed checks against DuckDB, outside ``setup_s``
   and outside the timed passes;
-- ``rep``: reset the state (untimed), run one timed pass in two parts,
-  then check its outputs (untimed).
+- ``rep``: one timed pass in two parts, then the checks of its outputs
+  (untimed);
+- ``final_check``: checks of the state the timed passes leave behind.
 """
 
 from __future__ import annotations
@@ -38,8 +39,7 @@ CHAIN = (
     ("ride_stops_vehicle_locations", "siri-update-ride-stops-vehicle-locations"),
     ("ride_aggregations", "gtfs-update-ride-aggregations"),
 )
-TASK_NAMES = [t for t, _ in CHAIN] + [
-    "packages_backfill", "packages_hourly", "curate_full", "curate_incremental"]
+TASK_NAMES = [t for t, _ in CHAIN] + ["packages_hourly", "curate_full", "curate_incremental"]
 
 
 class Runner:
@@ -98,15 +98,21 @@ class Workload:
         self.seed = seed
         self.sizes: dict = {}
 
-    def checks_once(self) -> None:
+    def final_check(self) -> None:
         pass
 
 
-class _Stride(Workload):
-    """Shared by ``catchup`` and ``steady``: a seeded lake, the catch-up
-    pass and the fingerprint of the tables and packages it leaves."""
+class Steady(Workload):
+    """One scheduler cycle over a converged lake. Set-up writes a seeded
+    lake in which a third of the rides are still to process and no
+    packages exist; the warm-up catches it up (the five-task chain, then
+    the package backfill) and so converges it. A timed pass is the four
+    hourly ``siri-*`` tasks with their registry-default ``num_days`` up
+    to the lake's last day, then the two daily tasks. Nothing is new, so
+    no row and no package may change."""
 
-    rides = 4000
+    name = "steady"
+    HOURLY = CHAIN[:4]
 
     def __init__(self, *a):
         super().__init__(*a)
@@ -115,28 +121,27 @@ class _Stride(Workload):
         self.pk = os.path.join(self.work, "packages")
 
     def generate(self) -> None:
-        self.sizes = gen.stride_lake(self.pristine, self.seed, self.rides)
+        shutil.rmtree(self.pristine, ignore_errors=True)
+        self.sizes = gen.stride_lake(self.pristine, self.seed)
 
-    def fresh_lake(self) -> None:
+    def warmup(self) -> None:
+        """The catch-up, on a fresh copy of the lake: the five-task chain
+        with the window and the guard clock pinned, then
+        ``siri-packages-backfill`` into an empty package dir."""
         shutil.rmtree(self.lake, ignore_errors=True)
         shutil.rmtree(self.pk, ignore_errors=True)
         shutil.copytree(self.pristine, self.lake)
-
-    def catchup(self) -> tuple[dict, float, float]:
-        """The five-task chain, then the package backfill. Returns the
-        task metrics and the seconds of each part."""
-        metrics, part1 = {}, 0.0
+        self.catchup_metrics = {}
         for short, name in CHAIN:
             params = {"base_dir": self.lake}
             if name.startswith("siri-"):
                 params.update(gen.CATCHUP_WINDOW)
             if short == "ride_durations":
                 params["now_ts"] = gen.NOW_TS
-            metrics[short], dt = self.r.task(short, name, **params)
-            part1 += dt
-        metrics["packages_backfill"], part2 = self.r.task(
+            self.catchup_metrics[short], _ = self.r.task(short, name, **params)
+        self.catchup_metrics["packages_backfill"], _ = self.r.task(
             "packages_backfill", "siri-packages-backfill", base_dir=self.lake, out_dir=self.pk)
-        return metrics, part1, part2
+        self.ref_fp = self.fingerprint()
 
     def fingerprint(self) -> dict:
         """Order-insensitive content hash and row count of the enriched
@@ -154,21 +159,8 @@ class _Stride(Workload):
         fp["packages"] = [h.hexdigest(), len(paths)]
         return fp
 
-
-class Catchup(_Stride):
-    """Catch-up after an outage: a third of the rides still to process and
-    no packages yet. Each pass starts from a fresh copy of the lake."""
-
-    name = "catchup"
-
-    def setup(self) -> None:
-        self.generate()
-        self.fresh_lake()
-        self.ref_metrics, _, _ = self.catchup()
-        self.ref_fp = self.fingerprint()
-
     def checks_once(self) -> None:
-        """Plain aggregates of the warm-up pass against DuckDB over the
+        """Plain aggregates of the catch-up against DuckDB over the
         generated parquet."""
         con = _duck()
         for t in ("siri_ride", "siri_ride_stop", "siri_vehicle_location", "gtfs_ride"):
@@ -180,7 +172,7 @@ class Catchup(_Stride):
 
         for t in ("siri_ride", "siri_ride_stop", "gtfs_ride"):
             (n,) = q(f"SELECT count(*) FROM g_{t}")
-            self.r.check(self.ref_fp[t][1] == n, f"catchup: {t} rows {self.ref_fp[t][1]} != {n}")
+            self.r.check(self.ref_fp[t][1] == n, f"catch-up: {t} rows {self.ref_fp[t][1]} != {n}")
         todo_n, dur_sum = q("""
             WITH d AS (
               SELECT r.id, round((epoch(max(l.recorded_at_time))
@@ -191,47 +183,20 @@ class Catchup(_Stride):
               WHERE r.updated_duration_minutes IS NULL
               GROUP BY r.id)
             SELECT count(*), CAST(sum(dur) AS BIGINT) FROM d""")
-        got = self.ref_metrics["ride_durations"].get("updated_duration")
-        self.r.check(got == todo_n, f"catchup: durations set {got} != {todo_n}")
+        got = self.catchup_metrics["ride_durations"].get("updated_duration")
+        self.r.check(got == todo_n, f"catch-up: durations set {got} != {todo_n}")
         out_n, out_sum = q("SELECT count(duration_minutes), "
                            "CAST(sum(duration_minutes) AS BIGINT) FROM out_ride")
         self.r.check((out_n, out_sum) == (todo_n, dur_sum),
-                     f"catchup: durations {(out_n, out_sum)} != {(todo_n, dur_sum)}")
+                     f"catch-up: durations {(out_n, out_sum)} != {(todo_n, dur_sum)}")
         (loc_n,) = q("SELECT count(*) FROM g_siri_vehicle_location "
                      "WHERE recorded_at_time IS NOT NULL")
         pkg_n = 0
         for p in glob.glob(os.path.join(self.pk, "*-metadata.json")):
             with open(p) as fh:
                 pkg_n += json.load(fh)["count_of_rows"]
-        self.r.check(pkg_n == loc_n, f"catchup: package rows {pkg_n} != {loc_n}")
+        self.r.check(pkg_n == loc_n, f"catch-up: package rows {pkg_n} != {loc_n}")
         con.close()
-
-    def rep(self) -> dict:
-        self.fresh_lake()
-        with self.r.tracer.span("rep") as span:
-            t0 = time.perf_counter()
-            metrics, part1, part2 = self.catchup()
-            wall = time.perf_counter() - t0
-        self.r.check(metrics == self.ref_metrics, f"catchup: metrics {metrics} != reference")
-        fp = self.fingerprint()
-        self.r.check(fp == self.ref_fp, f"catchup: fingerprint {fp} != {self.ref_fp}")
-        return {"pass": wall, "part1": part1, "part2": part2, "span": span, "metrics": metrics}
-
-
-class Steady(_Stride):
-    """One scheduler cycle over the converged lake the catch-up leaves:
-    the four hourly ``siri-*`` tasks with their registry-default
-    ``num_days`` up to the lake's last day, then the two daily tasks.
-    Nothing is new, so no row and no package may change."""
-
-    name = "steady"
-    HOURLY = CHAIN[:4]
-
-    def setup(self) -> None:
-        self.generate()
-        self.fresh_lake()
-        self.catchup()
-        self.ref_fp = self.fingerprint()
 
     def cycle(self) -> tuple[dict, float, float]:
         max_date = str(gen.LAST_DAY + datetime.timedelta(days=1))
@@ -264,10 +229,14 @@ class Steady(_Stride):
             and hourly.get("skipped", 0) + hourly.get("skipped_exists", 0)
             == self.ref_fp["packages"][1],
             f"steady: packages not all skipped {hourly}")
-        fp = self.fingerprint()
-        self.r.check(fp == self.ref_fp, f"steady: fingerprint {fp} != {self.ref_fp}")
         return {"pass": wall, "part1": part1, "part2": part2, "span": span,
                 "metrics": metrics}
+
+    def final_check(self) -> None:
+        """The tables and packages after the last pass equal those the
+        catch-up left: no pass changed a row or a package."""
+        fp = self.fingerprint()
+        self.r.check(fp == self.ref_fp, f"steady: fingerprint {fp} != {self.ref_fp}")
 
 
 class Curate(Workload):
@@ -275,7 +244,6 @@ class Curate(Workload):
     incremental run over the same corpus against run 1's history."""
 
     name = "curate"
-    docs = 15000
 
     def __init__(self, *a):
         super().__init__(*a)
@@ -291,8 +259,11 @@ class Curate(Workload):
                              out_dir=os.path.join(self.work, "out2"), **common)
         return {"curate_full": m1, "curate_incremental": m2}, d1, d2
 
-    def setup(self) -> None:
-        self.sizes = gen.corpus(self.corpus, self.seed, self.docs)
+    def generate(self) -> None:
+        shutil.rmtree(self.corpus, ignore_errors=True)
+        self.sizes = gen.corpus(self.corpus, self.seed)
+
+    def warmup(self) -> None:
         self.ref_metrics, _, _ = self._pair()
 
     def checks_once(self) -> None:
@@ -324,4 +295,4 @@ class Curate(Workload):
         return {"pass": wall, "part1": d1, "part2": d2, "span": span, "metrics": metrics}
 
 
-WORKLOADS = {w.name: w for w in (Catchup, Steady, Curate)}
+WORKLOADS = {w.name: w for w in (Steady, Curate)}
