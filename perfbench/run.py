@@ -7,7 +7,7 @@ Runs from the root of a checkout of the repository, on ``local[nproc]``,
 from one driver process, and reads and writes only under ``.bench_work/``
 in that checkout. With ``--trace 0`` the last stdout line carries the
 end-to-end metrics; with ``--trace 1`` it carries the per-layer metrics of
-a separate traced pass set (see README.md). The line before it records
+a traced pass (see README.md). The line before it records
 sizes, every pass, the CPU probe readings and any check failures.
 """
 
@@ -26,8 +26,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 # Set-ups per run: setup_s is their median.
 SETUPS = 5
-# Timed passes per run, at least: each time metric is their median.
-MIN_PASSES = 2
 
 
 def _environment(work: str) -> None:
@@ -49,43 +47,41 @@ def _environment(work: str) -> None:
     tempfile.tempdir = tmp
 
 
-def _measure(wl, seconds: float) -> list[dict]:
-    """Timed passes until ``seconds`` have passed, at least ``MIN_PASSES``."""
-    reps: list[dict] = []
-    t0 = time.perf_counter()
-    while len(reps) < MIN_PASSES or time.perf_counter() - t0 < seconds:
-        reps.append(wl.rep())
-    return reps
+def _fits(t0: float, seconds: float, *sides: list[dict]) -> bool:
+    """Whether one more pass on each side, as slow as that side's slowest
+    so far, still ends within ``seconds`` of ``t0``."""
+    more = sum(max(r["pass"] for r in side) for side in sides)
+    return time.perf_counter() - t0 + more <= seconds
 
 
-def _measure_traced(wl, seconds: float, tracer) -> tuple[list[dict], list[dict]]:
-    """Untraced and traced passes in turn, in the order U T T U U T ...,
-    until ``seconds`` have passed and each side has ``MIN_PASSES``. Both
-    sides run in the same Spark context, so a JVM still warming up slows
-    neither side more than the other."""
+def _traced(wl, tracer) -> dict:
+    """One pass with the spans and the layer wrappers on."""
+    untraced = wl.r.tracer
+    wl.r.tracer = tracer
+    tracer.reset_counters()
+    tracer.install()
+    try:
+        rep = wl.rep()
+    finally:
+        tracer.uninstall()
+        wl.r.tracer = untraced
+    rep["counters"] = tracer.counters()
+    return rep
+
+
+def _overhead_pairs(wl, seconds: float, tracer) -> tuple[list[dict], list[dict]]:
+    """Warm untraced and traced passes in turn, in the order U T T U U T
+    ..., while the next pair fits in ``seconds``; at least one pair. Both
+    sides run in the same event-logged Spark context, so the comparison
+    covers the spans and wrappers, not the event log, and a JVM still
+    warming up slows neither side more than the other."""
     plain: list[dict] = []
     traced: list[dict] = []
-    untraced = wl.r.tracer
     t0 = time.perf_counter()
-    while len(traced) < MIN_PASSES or time.perf_counter() - t0 < seconds:
+    while not traced or _fits(t0, seconds, plain, traced):
         for side in ((plain, traced) if len(plain) % 2 == 0 else (traced, plain)):
-            if side is plain:
-                plain.append(wl.rep())
-                continue
-            wl.r.tracer = tracer
-            tracer.reset_counters()
-            tracer.install()
-            try:
-                traced.append(wl.rep())
-            finally:
-                tracer.uninstall()
-                wl.r.tracer = untraced
-            traced[-1]["counters"] = tracer.counters()
+            side.append(wl.rep() if side is plain else _traced(wl, tracer))
     return plain, traced
-
-
-def _median(reps: list[dict], key: str) -> float:
-    return statistics.median(r[key] for r in reps)
 
 
 def _start_session():
@@ -177,44 +173,45 @@ def run(args, work: str) -> dict:
 
     runner = workloads.Runner(None, tracing.NullTracer())
     wl = workloads.WORKLOADS[args.workload](runner, work, args.seed)
+    log_dir = os.path.join(work, "eventlog") if args.trace else None
     # A set-up starts the Spark session and writes the inputs. The first
     # one launches the JVM; the others restart the Spark context in it.
+    # In a traced run the last one turns the event log on.
     setups = []
-    for _ in range(SETUPS):
+    for i in range(SETUPS):
         t0 = time.perf_counter()
-        runner.spark = _start_session() if runner.spark is None else _restart(runner.spark)
+        if runner.spark is None:
+            runner.spark = _start_session()
+        else:
+            runner.spark = _restart(runner.spark, log_dir if i == SETUPS - 1 else None)
         wl.generate()
         setups.append(time.perf_counter() - t0)
     spark = runner.spark
     record["setups_s"] = [round(x, 4) for x in setups]
     record["sizes"] = wl.sizes
-    t0 = time.perf_counter()
-    wl.warmup()
-    record["warmup_s"] = round(time.perf_counter() - t0, 3)
+
+    # The timed pass: the first one in this process.
+    if args.trace:
+        tracer = tracing.Tracer(spark.sparkContext)
+        rep = _traced(wl, tracer)
+        plain, traced = _overhead_pairs(wl, args.seconds, tracer)
+    else:
+        rep = wl.rep()
     t0 = time.perf_counter()
     wl.checks_once()
     record["checks_once_s"] = round(time.perf_counter() - t0, 3)
-
+    record["pass"] = {k: round(rep[k], 4) for k in ("pass", "part1", "part2")}
     if args.trace:
-        # The event log is on for the untraced passes too, so the
-        # overhead figure covers spans and wrappers, not the log.
-        log_dir = os.path.join(work, "eventlog")
-        spark = runner.spark = _restart(spark, log_dir)
-        tracer = tracing.Tracer(spark.sparkContext)
-        reps, traced = _measure_traced(wl, args.seconds, tracer)
-    else:
-        reps = _measure(wl, args.seconds)
-    wl.final_check()
-    record["passes"] = [{k: round(r[k], 4) for k in ("pass", "part1", "part2")} for r in reps]
-    if args.trace:
-        record["traced_passes"] = [round(r["pass"], 4) for r in traced]
+        record["overhead_passes"] = {"untraced": [round(r["pass"], 4) for r in plain],
+                                     "traced": [round(r["pass"], 4) for r in traced]}
         rss = _jvm_peak_rss_mb()
         spark.stop()
-        layers = tracing.layer_metrics(tracer, tracing.parse_event_log(log_dir), traced,
+        layers = tracing.layer_metrics(tracer, tracing.parse_event_log(log_dir), rep,
                                        workloads.TASK_NAMES)
         layers["spark.jvm_peak_rss_mb"] = rss
         layers["trace.overhead_pct"] = 100.0 * (
-            _median(traced, "pass") / _median(reps, "pass") - 1.0)
+            statistics.median(r["pass"] for r in traced)
+            / statistics.median(r["pass"] for r in plain) - 1.0)
         spans = os.path.join(ROOT, ".bench_work", "traces",
                              f"{args.workload}-seed{args.seed}.spans.jsonl")
         tracer.write_spans(spans)
@@ -223,9 +220,7 @@ def run(args, work: str) -> dict:
     else:
         metrics = {
             "setup_s": {"value": statistics.median(setups), "unit": "s"},
-            "pass_s": {"value": _median(reps, "pass"), "unit": "s"},
-            "part1_s": {"value": _median(reps, "part1"), "unit": "s"},
-            "part2_s": {"value": _median(reps, "part2"), "unit": "s"},
+            "pass_s": {"value": rep["pass"], "unit": "s"},
         }
     failed = min(runner.failed, runner.attempted)
     if not args.trace:

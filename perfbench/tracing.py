@@ -2,13 +2,14 @@
 Spark event log, reduced to the per-layer metrics.
 
 Spans are recorded from the benchmark's own code around the calls it
-makes into each layer: ``rep`` around one timed pass, ``task.<t>`` around
-each ``run_task``, and ``sources.read_table`` / ``sources.overwrite``
-around the lake reads and snapshot writes the tasks make. Each span sets
-the Spark job group to its id, so every Spark job names the span that
-started it. The layer calls are reached by wrapping module attributes
-while a traced pass runs (``Tracer.install`` / ``uninstall``); the
-program itself is not edited.
+makes into each layer: one span around each timed part of a pass
+(``catchup`` and ``cycle`` on ``steady``, ``pair`` on ``curate``),
+``task.<t>`` around each ``run_task``, and ``sources.read_table`` /
+``sources.overwrite`` around the lake reads and snapshot writes the
+tasks make. Each span sets the Spark job group to its id, so every Spark
+job names the span that started it. The layer calls are reached by
+wrapping module attributes while a traced pass runs (``Tracer.install``
+/ ``uninstall``); the program itself is not edited.
 
 Everything stays in memory until the run ends; ``write_spans`` then
 writes each span with its self time (duration minus the time its child
@@ -22,7 +23,6 @@ import functools
 import glob
 import json
 import os
-import statistics
 import time
 
 MB = 1024 * 1024
@@ -192,15 +192,17 @@ def _union_s(intervals: list[tuple[float, float]], lo: float, hi: float) -> floa
     return total
 
 
-def layer_metrics(tracer: Tracer, jobs: dict[int, dict], reps: list[dict],
+def layer_metrics(tracer: Tracer, jobs: dict[int, dict], rep: dict,
                   task_names: list[str]) -> dict[str, float]:
-    """Per-layer metrics as the median over the traced reps.
+    """Per-layer metrics of one traced rep.
 
-    ``reps`` holds, per traced rep, its ``span`` (the ``rep`` span), the
-    layer ``counters`` collected during it and the ``metrics`` each task
-    returned, keyed by task short name. Each Spark job belongs to the
+    ``rep`` holds its top-level ``spans`` (one per part of the pass that
+    has its own span), the layer ``counters`` collected during it and the
+    ``metrics`` each task run returned. Each Spark job belongs to the
     span named by its job group; a job without one belongs to the
-    innermost span open when it was submitted."""
+    innermost span open when it was submitted. A task that runs more than
+    once in a rep (the catch-up and the cycle both run the hourly tasks
+    and the ledger) sums its runs."""
     spans = {s["id"]: s for s in tracer.spans}
 
     def owner(job: dict) -> dict | None:
@@ -214,61 +216,60 @@ def layer_metrics(tracer: Tracer, jobs: dict[int, dict], reps: list[dict],
             yield s
             s = spans.get(s["parent"])
 
-    per_rep: list[dict[str, float]] = []
-    for rep in reps:
-        root = rep["span"]
-        v: dict[str, float] = {}
-        rep_jobs: list[dict] = []
-        by_task: dict[str, list[dict]] = {t: [] for t in task_names}
-        for job in jobs.values():
-            chain = list(ancestors(owner(job)))
-            if root not in chain or job["end"] is None:
-                continue
-            rep_jobs.append(job)
-            for s in chain:
-                if s["name"].startswith("task."):
-                    by_task[s["name"][5:]].append(job)
-        task_spans = {s["name"][5:]: s for s in tracer.spans
-                      if s["parent"] == root["id"] and s["name"].startswith("task.")}
-        for t in task_names:
-            s, tj = task_spans.get(t), by_task[t]
-            wall = (s["end"] - s["start"]) if s else 0.0
-            v[f"task.{t}.wall_s"] = wall
-            v[f"task.{t}.jobs"] = len(tj)
-            v[f"task.{t}.driver_gap_s"] = (
-                wall - _union_s([(j["start"], j["end"]) for j in tj], s["start"], s["end"])
-                if s else 0.0)
-            for k in EXEC_KEYS:
-                v[f"exec.{t}.{k}"] = sum(j[k] for j in tj)
-        c = rep["counters"]
-        for name in ("sources.read_table", "sources.overwrite",
-                     "sources.footer_stats", "sources.manifest", "plans.build"):
-            calls, secs, _ = c.get(name, (0, 0.0, 0))
-            v[f"{name}.calls"] = calls
-            v[f"{name}.s"] = secs
-        v["sources.swap.s"] = c.get("sources.swap", (0, 0.0, 0))[1]
-        v["sources.input_mb"] = sum(j["input_mb"] for j in rep_jobs)
-        v["sources.output_mb"] = sum(j["output_mb"] for j in rep_jobs)
-        written = c.get("sources.overwrite", (0, 0.0, 0))[2]
-        v["sources.rows_written"] = written
-        newly = sum(m.get(k, 0) for m in rep["metrics"].values() for k in NEWLY_SET)
-        v["sources.useful_write_ratio"] = newly / written if written else 0.0
-        hashed = written_h = 0
-        for m in rep["metrics"].values():
-            if "hours_total" in m:  # backfill
-                hashed += m["hours_total"]
-                written_h += m["written"]
-            elif "hours_scanned" in m:  # hourly sweep
-                hashed += sum(m.get(k, 0) for k in ("created", "updated", "skipped", "empty"))
-                written_h += m.get("created", 0) + m.get("updated", 0)
-        v["packages.hours_hashed"] = hashed
-        v["packages.hours_written"] = written_h
-        v["packages.write_ratio"] = written_h / hashed if hashed else 0.0
-        wall = root["end"] - root["start"]
-        v["spark.jobs"] = len(rep_jobs)
-        v["spark.driver_gap_s"] = wall - _union_s(
-            [(j["start"], j["end"]) for j in rep_jobs], root["start"], root["end"])
-        v["spark.peak_exec_memory_mb"] = max((j["peak_mem_mb"] for j in rep_jobs), default=0.0)
-        per_rep.append(v)
-    return {k: statistics.median(r[k] for r in per_rep) for k in per_rep[0]}
+    def gap(span: dict, span_jobs: list[dict]) -> float:
+        """Span wall time minus the union of its jobs' intervals."""
+        return span["end"] - span["start"] - _union_s(
+            [(j["start"], j["end"]) for j in span_jobs], span["start"], span["end"])
+
+    roots = {s["id"] for s in rep["spans"]}
+    v: dict[str, float] = {}
+    rep_jobs: list[dict] = []
+    by_span: dict[int, list[dict]] = {}
+    for job in jobs.values():
+        chain = list(ancestors(owner(job)))
+        if job["end"] is None or not roots & {s["id"] for s in chain}:
+            continue
+        rep_jobs.append(job)
+        for s in chain:
+            by_span.setdefault(s["id"], []).append(job)
+    task_spans = {t: [] for t in task_names}
+    for s in tracer.spans:
+        if s["parent"] in roots and s["name"].startswith("task."):
+            task_spans[s["name"][5:]].append(s)
+    for t in task_names:
+        tj = [j for s in task_spans[t] for j in by_span.get(s["id"], [])]
+        v[f"task.{t}.wall_s"] = sum(s["end"] - s["start"] for s in task_spans[t])
+        v[f"task.{t}.jobs"] = len(tj)
+        v[f"task.{t}.driver_gap_s"] = sum(gap(s, by_span.get(s["id"], []))
+                                          for s in task_spans[t])
+        for k in EXEC_KEYS:
+            v[f"exec.{t}.{k}"] = sum(j[k] for j in tj)
+    c = rep["counters"]
+    for name in ("sources.read_table", "sources.overwrite",
+                 "sources.footer_stats", "sources.manifest", "plans.build"):
+        calls, secs, _ = c.get(name, (0, 0.0, 0))
+        v[f"{name}.calls"] = calls
+        v[f"{name}.s"] = secs
+    v["sources.swap.s"] = c.get("sources.swap", (0, 0.0, 0))[1]
+    v["sources.input_mb"] = sum(j["input_mb"] for j in rep_jobs)
+    v["sources.output_mb"] = sum(j["output_mb"] for j in rep_jobs)
+    written = c.get("sources.overwrite", (0, 0.0, 0))[2]
+    v["sources.rows_written"] = written
+    newly = sum(m.get(k, 0) for m in rep["metrics"] for k in NEWLY_SET)
+    v["sources.useful_write_ratio"] = newly / written if written else 0.0
+    hashed = written_h = 0
+    for m in rep["metrics"]:
+        if "hours_total" in m:  # backfill
+            hashed += m["hours_total"]
+            written_h += m["written"]
+        elif "hours_scanned" in m:  # hourly sweep
+            hashed += sum(m.get(k, 0) for k in ("created", "updated", "skipped", "empty"))
+            written_h += m.get("created", 0) + m.get("updated", 0)
+    v["packages.hours_hashed"] = hashed
+    v["packages.hours_written"] = written_h
+    v["packages.write_ratio"] = written_h / hashed if hashed else 0.0
+    v["spark.jobs"] = len(rep_jobs)
+    v["spark.driver_gap_s"] = sum(gap(s, by_span.get(s["id"], [])) for s in rep["spans"])
+    v["spark.peak_exec_memory_mb"] = max((j["peak_mem_mb"] for j in rep_jobs), default=0.0)
+    return v
 

@@ -2,16 +2,13 @@
 
 Each workload reaches the program only through ``plans.tasks.run_task``
 and the tasks registered by ``plans.stride_tasks`` and
-``plans.llm_tasks``. A workload has five steps:
+``plans.llm_tasks``. A workload has three steps:
 
 - ``generate``: write the seeded inputs (part of ``setup_s``);
-- ``warmup``: one untimed pass in the fresh process; its outputs become
-  the reference the timed passes are checked against;
-- ``checks_once``: per-seed checks against DuckDB, outside ``setup_s``
-  and outside the timed passes;
 - ``rep``: one timed pass in two parts, then the checks of its outputs
   (untimed);
-- ``final_check``: checks of the state the timed passes leave behind.
+- ``checks_once``: per-seed checks against DuckDB, after the timed
+  passes, outside ``setup_s`` and outside the timed regions.
 """
 
 from __future__ import annotations
@@ -39,7 +36,8 @@ CHAIN = (
     ("ride_stops_vehicle_locations", "siri-update-ride-stops-vehicle-locations"),
     ("ride_aggregations", "gtfs-update-ride-aggregations"),
 )
-TASK_NAMES = [t for t, _ in CHAIN] + ["packages_hourly", "curate_full", "curate_incremental"]
+TASK_NAMES = [t for t, _ in CHAIN] + [
+    "packages_backfill", "packages_hourly", "curate_full", "curate_incremental"]
 
 
 class Runner:
@@ -98,18 +96,18 @@ class Workload:
         self.seed = seed
         self.sizes: dict = {}
 
-    def final_check(self) -> None:
-        pass
-
 
 class Steady(Workload):
-    """One scheduler cycle over a converged lake. Set-up writes a seeded
-    lake in which a third of the rides are still to process and no
-    packages exist; the warm-up catches it up (the five-task chain, then
-    the package backfill) and so converges it. A timed pass is the four
-    hourly ``siri-*`` tasks with their registry-default ``num_days`` up
-    to the lake's last day, then the two daily tasks. Nothing is new, so
-    no row and no package may change."""
+    """The catch-up after an outage, then one scheduler cycle over the
+    lake it leaves. Set-up writes a seeded lake in which a third of the
+    rides are still to process and no packages exist. A pass copies it
+    afresh (untimed) and catches it up: part 1 is the five-task chain
+    with the window and the guard clock pinned, then
+    ``siri-packages-backfill`` into an empty package dir. That converges
+    the lake. Part 2 is one cycle over it: the four hourly ``siri-*``
+    tasks with their registry-default ``num_days`` up to the lake's last
+    day, then the two daily tasks. Nothing is new in the cycle, so no row
+    and no package may change."""
 
     name = "steady"
     HOURLY = CHAIN[:4]
@@ -119,29 +117,39 @@ class Steady(Workload):
         self.pristine = os.path.join(self.work, "pristine")
         self.lake = os.path.join(self.work, "lake")
         self.pk = os.path.join(self.work, "packages")
+        # (catch-up task metrics, fingerprint after it), one per pass
+        self.catchups: list[tuple[dict, dict]] = []
 
     def generate(self) -> None:
         shutil.rmtree(self.pristine, ignore_errors=True)
         self.sizes = gen.stride_lake(self.pristine, self.seed)
 
-    def warmup(self) -> None:
-        """The catch-up, on a fresh copy of the lake: the five-task chain
-        with the window and the guard clock pinned, then
-        ``siri-packages-backfill`` into an empty package dir."""
-        shutil.rmtree(self.lake, ignore_errors=True)
-        shutil.rmtree(self.pk, ignore_errors=True)
-        shutil.copytree(self.pristine, self.lake)
-        self.catchup_metrics = {}
+    def catchup(self) -> dict:
+        metrics = {}
         for short, name in CHAIN:
             params = {"base_dir": self.lake}
             if name.startswith("siri-"):
                 params.update(gen.CATCHUP_WINDOW)
             if short == "ride_durations":
                 params["now_ts"] = gen.NOW_TS
-            self.catchup_metrics[short], _ = self.r.task(short, name, **params)
-        self.catchup_metrics["packages_backfill"], _ = self.r.task(
+            metrics[short], _ = self.r.task(short, name, **params)
+        metrics["packages_backfill"], _ = self.r.task(
             "packages_backfill", "siri-packages-backfill", base_dir=self.lake, out_dir=self.pk)
-        self.ref_fp = self.fingerprint()
+        return metrics
+
+    def cycle(self) -> dict:
+        max_date = str(gen.LAST_DAY + datetime.timedelta(days=1))
+        metrics = {}
+        for short, name in self.HOURLY:
+            params = {"base_dir": self.lake, "max_date": max_date}
+            if short == "ride_durations":
+                params["now_ts"] = gen.NOW_TS
+            metrics[short], _ = self.r.task(short, name, **params)
+        metrics["ride_aggregations"], _ = self.r.task(
+            "ride_aggregations", "gtfs-update-ride-aggregations", base_dir=self.lake)
+        metrics["packages_hourly"], _ = self.r.task(
+            "packages_hourly", "siri-hourly-update-packages", base_dir=self.lake, out_dir=self.pk)
+        return metrics
 
     def fingerprint(self) -> dict:
         """Order-insensitive content hash and row count of the enriched
@@ -159,9 +167,42 @@ class Steady(Workload):
         fp["packages"] = [h.hexdigest(), len(paths)]
         return fp
 
+    def rep(self) -> dict:
+        shutil.rmtree(self.lake, ignore_errors=True)
+        shutil.rmtree(self.pk, ignore_errors=True)
+        shutil.copytree(self.pristine, self.lake)
+        with self.r.tracer.span("catchup") as s1:
+            t0 = time.perf_counter()
+            caught = self.catchup()
+            part1 = time.perf_counter() - t0
+        before = self.fingerprint()
+        self.catchups.append((caught, before))
+        with self.r.tracer.span("cycle") as s2:
+            t0 = time.perf_counter()
+            cycled = self.cycle()
+            part2 = time.perf_counter() - t0
+        for short, m in cycled.items():
+            for k in NEWLY_SET:
+                self.r.check(m.get(k, 0) == 0, f"steady: {short} newly set {k}={m.get(k)}")
+        agg = cycled["ride_aggregations"]
+        self.r.check(agg.get("dates_processed") == 0, f"steady: ride_aggregations {agg}")
+        hourly = cycled["packages_hourly"]
+        self.r.check(
+            hourly.get("created") == 0 and hourly.get("updated") == 0
+            and hourly.get("skipped", 0) + hourly.get("skipped_exists", 0)
+            == before["packages"][1],
+            f"steady: packages not all skipped {hourly}")
+        after = self.fingerprint()
+        self.r.check(after == before, f"steady: fingerprint {after} != {before}")
+        return {"pass": part1 + part2, "part1": part1, "part2": part2, "spans": [s1, s2],
+                "metrics": list(caught.values()) + list(cycled.values())}
+
     def checks_once(self) -> None:
-        """Plain aggregates of the catch-up against DuckDB over the
-        generated parquet."""
+        """Every catch-up gave the same task metrics and tables; the first
+        one's plain aggregates match DuckDB over the generated parquet."""
+        caught, fp = self.catchups[0]
+        for other in self.catchups[1:]:
+            self.r.check(other == (caught, fp), "catch-up: passes differ")
         con = _duck()
         for t in ("siri_ride", "siri_ride_stop", "siri_vehicle_location", "gtfs_ride"):
             _view(con, f"g_{t}", os.path.join(self.pristine, f"{t}.parquet"))
@@ -172,7 +213,7 @@ class Steady(Workload):
 
         for t in ("siri_ride", "siri_ride_stop", "gtfs_ride"):
             (n,) = q(f"SELECT count(*) FROM g_{t}")
-            self.r.check(self.ref_fp[t][1] == n, f"catch-up: {t} rows {self.ref_fp[t][1]} != {n}")
+            self.r.check(fp[t][1] == n, f"catch-up: {t} rows {fp[t][1]} != {n}")
         todo_n, dur_sum = q("""
             WITH d AS (
               SELECT r.id, round((epoch(max(l.recorded_at_time))
@@ -183,7 +224,7 @@ class Steady(Workload):
               WHERE r.updated_duration_minutes IS NULL
               GROUP BY r.id)
             SELECT count(*), CAST(sum(dur) AS BIGINT) FROM d""")
-        got = self.catchup_metrics["ride_durations"].get("updated_duration")
+        got = caught["ride_durations"].get("updated_duration")
         self.r.check(got == todo_n, f"catch-up: durations set {got} != {todo_n}")
         out_n, out_sum = q("SELECT count(duration_minutes), "
                            "CAST(sum(duration_minutes) AS BIGINT) FROM out_ride")
@@ -198,46 +239,6 @@ class Steady(Workload):
         self.r.check(pkg_n == loc_n, f"catch-up: package rows {pkg_n} != {loc_n}")
         con.close()
 
-    def cycle(self) -> tuple[dict, float, float]:
-        max_date = str(gen.LAST_DAY + datetime.timedelta(days=1))
-        metrics, part1 = {}, 0.0
-        for short, name in self.HOURLY:
-            params = {"base_dir": self.lake, "max_date": max_date}
-            if short == "ride_durations":
-                params["now_ts"] = gen.NOW_TS
-            metrics[short], dt = self.r.task(short, name, **params)
-            part1 += dt
-        metrics["ride_aggregations"], d1 = self.r.task(
-            "ride_aggregations", "gtfs-update-ride-aggregations", base_dir=self.lake)
-        metrics["packages_hourly"], d2 = self.r.task(
-            "packages_hourly", "siri-hourly-update-packages", base_dir=self.lake, out_dir=self.pk)
-        return metrics, part1, d1 + d2
-
-    def rep(self) -> dict:
-        with self.r.tracer.span("rep") as span:
-            t0 = time.perf_counter()
-            metrics, part1, part2 = self.cycle()
-            wall = time.perf_counter() - t0
-        for short, m in metrics.items():
-            for k in NEWLY_SET:
-                self.r.check(m.get(k, 0) == 0, f"steady: {short} newly set {k}={m.get(k)}")
-        agg = metrics["ride_aggregations"]
-        self.r.check(agg.get("dates_processed") == 0, f"steady: ride_aggregations {agg}")
-        hourly = metrics["packages_hourly"]
-        self.r.check(
-            hourly.get("created") == 0 and hourly.get("updated") == 0
-            and hourly.get("skipped", 0) + hourly.get("skipped_exists", 0)
-            == self.ref_fp["packages"][1],
-            f"steady: packages not all skipped {hourly}")
-        return {"pass": wall, "part1": part1, "part2": part2, "span": span,
-                "metrics": metrics}
-
-    def final_check(self) -> None:
-        """The tables and packages after the last pass equal those the
-        catch-up left: no pass changed a row or a package."""
-        fp = self.fingerprint()
-        self.r.check(fp == self.ref_fp, f"steady: fingerprint {fp} != {self.ref_fp}")
-
 
 class Curate(Workload):
     """``llm-curate-corpus`` with a fresh history, then again as an
@@ -248,51 +249,43 @@ class Curate(Workload):
     def __init__(self, *a):
         super().__init__(*a)
         self.corpus = os.path.join(self.work, "corpus")
-
-    def _pair(self) -> tuple[dict, float, float]:
-        for d in ("hist", "out1", "out2"):
-            shutil.rmtree(os.path.join(self.work, d), ignore_errors=True)
-        common = {"base_dir": self.corpus, "history_dir": os.path.join(self.work, "hist")}
-        m1, d1 = self.r.task("curate_full", "llm-curate-corpus",
-                             out_dir=os.path.join(self.work, "out1"), **common)
-        m2, d2 = self.r.task("curate_incremental", "llm-curate-corpus",
-                             out_dir=os.path.join(self.work, "out2"), **common)
-        return {"curate_full": m1, "curate_incremental": m2}, d1, d2
+        # (task metrics, run 1's survivors), one per pass
+        self.pairs: list[tuple[dict, set]] = []
 
     def generate(self) -> None:
         shutil.rmtree(self.corpus, ignore_errors=True)
         self.sizes = gen.corpus(self.corpus, self.seed)
 
-    def warmup(self) -> None:
-        self.ref_metrics, _, _ = self._pair()
+    def rep(self) -> dict:
+        for d in ("hist", "out1", "out2"):
+            shutil.rmtree(os.path.join(self.work, d), ignore_errors=True)
+        common = {"base_dir": self.corpus, "history_dir": os.path.join(self.work, "hist")}
+        with self.r.tracer.span("pair") as span:
+            m1, d1 = self.r.task("curate_full", "llm-curate-corpus",
+                                 out_dir=os.path.join(self.work, "out1"), **common)
+            m2, d2 = self.r.task("curate_incremental", "llm-curate-corpus",
+                                 out_dir=os.path.join(self.work, "out2"), **common)
+        self.r.check(m2.get("n_final") == 0, f"curate: run 2 admitted {m2.get('n_final')}")
+        survivors = {r[0] for r in self.r.spark.read.parquet(
+            os.path.join(self.work, "out1")).select("doc_id").collect()}
+        self.pairs.append(({"curate_full": m1, "curate_incremental": m2}, survivors))
+        return {"pass": d1 + d2, "part1": d1, "part2": d2, "spans": [span],
+                "metrics": [m1, m2]}
 
     def checks_once(self) -> None:
-        """Evaluate the ``corpus_clean_keep`` oracle SQL with DuckDB: run
-        1's survivors must be exactly its rows."""
+        """Every pass gave the same task metrics, and run 1's survivors
+        are exactly the rows of the ``corpus_clean_keep`` oracle SQL,
+        evaluated with DuckDB."""
         from open_bus_stride_etl_spark.plans.registry import oracle_sql
 
         con = _duck()
         _view(con, "documents", os.path.join(self.corpus, "documents.parquet"))
-        self.oracle = {r[0] for r in con.execute(oracle_sql()["corpus_clean_keep"]).fetchall()}
+        oracle = {r[0] for r in con.execute(oracle_sql()["corpus_clean_keep"]).fetchall()}
         con.close()
-        self._check_survivors()
-
-    def _check_survivors(self) -> None:
-        got = {r[0] for r in self.r.spark.read.parquet(
-            os.path.join(self.work, "out1")).select("doc_id").collect()}
-        self.r.check(got == self.oracle,
-                     f"curate: {len(got ^ self.oracle)} survivors differ from the oracle")
-
-    def rep(self) -> dict:
-        with self.r.tracer.span("rep") as span:
-            t0 = time.perf_counter()
-            metrics, d1, d2 = self._pair()
-            wall = time.perf_counter() - t0
-        self.r.check(metrics == self.ref_metrics, f"curate: metrics {metrics} != reference")
-        self.r.check(metrics["curate_incremental"].get("n_final") == 0,
-                     f"curate: run 2 admitted {metrics['curate_incremental'].get('n_final')}")
-        self._check_survivors()
-        return {"pass": wall, "part1": d1, "part2": d2, "span": span, "metrics": metrics}
+        for metrics, survivors in self.pairs:
+            self.r.check(metrics == self.pairs[0][0], f"curate: metrics {metrics} differ")
+            self.r.check(survivors == oracle,
+                         f"curate: {len(survivors ^ oracle)} survivors differ from the oracle")
 
 
 WORKLOADS = {w.name: w for w in (Steady, Curate)}
